@@ -1,9 +1,10 @@
 package graft
 
-/** Shared helpers for the machine-readable JSON result lines the mains emit
-  * (Bench, Main): locale-safe number formatting and string escaping. One
-  * definition so a path with a quote/backslash can't corrupt one surface
-  * while the other stays safe. */
+/** Shared helpers for the machine-readable JSON the mains emit — Bench's
+  * result line, Main's summary line, Verify's oracle_sql.json — and the
+  * perfbench records: locale-safe number formatting and string escaping.
+  * One definition so a path with a quote/backslash or SQL with a control
+  * character can't corrupt one surface while another stays safe. */
 object JsonOut {
 
   // Locale.ROOT: the f-interpolator uses the default locale, and a

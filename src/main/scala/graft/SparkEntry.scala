@@ -471,13 +471,6 @@ object SparkEntry {
           MultimodalFunctions.mediaMeta(
             CorpusSource.pages(s, 280).union(CorpusSource.mediaPages(s, 48))))
         .orderBy("url")),
-    // per-frame explode rows with stub decode (frame-sample plumbing)
-    "x12_frame_sample" -> ((s, _) =>
-      MultimodalFunctions.frameSample(CorpusSource.pages(s, 280))
-        .withColumn("feature_sum",
-          round(aggregate(col("feature"), lit(0.0d), (acc, x) => acc + x.cast("double")), 4))
-        .drop("feature")
-        .orderBy("url", "frame_idx")),
     // PDF branch: page/span explode over PDF payloads only — the tagPath
     // prefix below IS the selector (a charset clause would match every
     // utf-8 HTML page too; r2 "what's wrong" #3)
@@ -1446,7 +1439,9 @@ object SparkEntry {
     * — and the per-bit majority vote / band layout mirror the kernel.
     * Longer tokens or non-ASCII text would need the ≥32-byte stripe loop
     * (a recursive CTE) — out of contract, same stance as the clean-corpus
-    * contract on [[ivfCentroidCtes]]. Seeds: 42 = the canonical signature,
+    * contract on [[ivfCentroidCtes]]; a token longer than 8 makes the
+    * oracle raise a named DuckDB error instead of hashing it wrongly.
+    * Seeds: 42 = the canonical signature,
     * 11400714819323198485 = unsigned SimHash64Kernel.HI_SEED. */
   private def simhashSigCtes(tag: String, src: String, seedU: String): String = {
     val p1 = "11400714785074694791"; val p2 = "14029467366897019727"
@@ -1483,7 +1478,9 @@ object SparkEntry {
        |        FROM $src)),
        |h0_$tag AS (
        |  SELECT doc_id, tid, tok, n,
-       |         CASE WHEN n >= 4 AND n < 8 THEN 4
+       |         CASE WHEN n > 8 THEN
+       |                error('simhash oracle contract: token longer than 8 bytes')
+       |              WHEN n >= 4 AND n < 8 THEN 4
        |              ELSE CASE WHEN n = 8 THEN 8 ELSE 0 END END AS st,
        |         CAST($seedU + $p5 + n AS UBIGINT) AS h
        |  FROM tok_$tag),

@@ -126,6 +126,25 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(pairs == Vector("/home" -> "Home", "/x" -> "Go"), pairs)
   }
 
+  test("self-closed svg/math roots do not swallow the text after them") {
+    // HTML5 honors the slash on foreign-content roots only: '<svg .../>'
+    // is an empty element, so "Home" is anchor and body text. (Unquoted,
+    // '<svg class=icon/>' keeps the slash in the value "icon/" and opens
+    // the svg, in browsers too — hence the quoted and spaced forms.)
+    val arena = new TokenArena()
+    for (svg <- Seq("<svg/>", "<svg class=\"icon\"/>", "<svg class=icon />",
+        "<math/>")) {
+      val pairs = HtmlTokenizer.anchorTexts(
+        s"<a href=/x>${svg}Home</a>".getBytes(StandardCharsets.UTF_8), arena)
+      assert(pairs == Vector("/x" -> "Home"), s"$svg: $pairs")
+    }
+    val page = ("<html><body><p>Back to the <svg class=\"icon\"/>Home page of " +
+      "the archive, where every issue of the journal is listed by year.</p>" +
+      "</body></html>").getBytes(StandardCharsets.UTF_8)
+    val doc = graft.extract.Extractor.extract("https://e.org/", page)
+    assert(doc.text.contains("Home page"), doc.text)
+  }
+
   test("charset declared inside a comment does not hijack the document") {
     val arena = new TokenArena()
     val html = ("<html><head><!--[if lt IE 9]><meta charset=\"utf-16le\"><![endif]-->" +

@@ -8,8 +8,8 @@ import graft.functions.MultimodalFunctions
 import graft.pipeline.CorpusSource
 
 /** Multimodal plumbing: resize arithmetic (exact vs the reference's
-  * DetResizeForTest type-0 semantics), frame-sample explode shape, and
-  * determinism of the stubbed decodes. */
+  * DetResizeForTest type-0 semantics), header and pixel decodes, and
+  * determinism of the decoded features. */
 class MultimodalSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -66,6 +66,20 @@ class MultimodalSpec extends AnyFunSuite {
     assert(ImageHeaders.dims(Array[Byte](1, 2, 3)).isEmpty)
     assert(ImageHeaders.dims(MediaFixtures.jpeg(640, 480).take(10)).isEmpty)
     assert(ImageHeaders.dims(null).isEmpty)
+  }
+
+  test("image headers: 16-byte OS/2 2.x BMP header reads int32 dims") {
+    import graft.functions.ImageHeaders
+    // 14-byte file header + the shortest OS/2 2.x DIB header (16 bytes:
+    // size, int32 width 300, int32 height -200 = top-down, planes, bpp)
+    val bmp = Array[Int]('B', 'M', 30, 0, 0, 0, 0, 0, 0, 0, 30, 0, 0, 0,
+      16, 0, 0, 0, 0x2c, 0x01, 0, 0, 0x38, 0xff, 0xff, 0xff, 1, 0, 24, 0)
+      .map(_.toByte)
+    assert(ImageHeaders.dims(bmp).contains(ImageHeaders.Dims(300, 200)))
+    // DIB size 12 (BITMAPCOREHEADER) stays the one uint16 layout: 320x200
+    val core = Array[Int]('B', 'M', 26, 0, 0, 0, 0, 0, 0, 0, 26, 0, 0, 0,
+      12, 0, 0, 0, 0x40, 0x01, 0xc8, 0x00, 1, 0, 24, 0).map(_.toByte)
+    assert(ImageHeaders.dims(core).contains(ImageHeaders.Dims(320, 200)))
   }
 
   test("mediaMeta reports real header dims for image rows, stub for the rest") {
@@ -266,28 +280,5 @@ class MultimodalSpec extends AnyFunSuite {
       assert(dec == ((idx / 4) % 2 == 1), s"$url decoded=$dec") // real rounds decode
     }
     assert(rows.count(_._2._3) == 12)
-  }
-
-  test("frameSample: per-frame rows, bounded, deterministic") {
-    val pages = CorpusSource.pages(spark, 48)
-    val frames = MultimodalFunctions.frameSample(pages, strideBytes = 1024, maxFrames = 5)
-    val rows = frames.collect()
-    assert(rows.nonEmpty)
-    val byUrl = rows.groupBy(_.getString(0))
-    assert(byUrl.size == 48) // every page yields at least one frame
-    byUrl.values.foreach { fs =>
-      val idxs = fs.map(_.getInt(1)).sorted
-      assert(idxs.head == 0 && idxs.length <= 5)
-      assert(idxs.toSeq == (0 until idxs.length)) // contiguous frame indices
-      // 25fps spacing
-      fs.foreach(r => assert(r.getLong(2) == r.getInt(1) * 40L))
-    }
-    // deterministic across runs
-    val again = MultimodalFunctions.frameSample(pages, 1024, 5)
-      .collect().map(_.toString).sorted.toSeq
-    assert(again == rows.map(_.toString).sorted.toSeq)
-    // larger payloads yield more frames (up to the cap)
-    val counts = byUrl.map { case (u, fs) => u -> fs.length }
-    assert(counts.values.exists(_ == 5) && counts.values.exists(_ < 5))
   }
 }
